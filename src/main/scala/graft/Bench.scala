@@ -241,14 +241,12 @@ object Bench {
       }
     def r3(x: Double) = math.rint(x * 1000) / 1000
     // top-K-by-cost compact map under a fixed character budget
-    val topEntries = scala.collection.mutable.ListBuffer.empty[String]
-    var budget = 1100
-    for ((k, v) <- results.toSeq.sortBy(-_._2).take(40)) {
-      val e = s"\"$k\":${r3(v)}"
-      if (budget - (e.length + 1) >= 0) {
-        topEntries += e; budget -= e.length + 1
-      }
-    }
+    // stops at the first entry that misses the budget, so the published
+    // map is an exact cost-ordered prefix
+    val entries = results.toSeq.sortBy(-_._2).take(40)
+      .map { case (k, v) => s"\"$k\":${r3(v)}" }
+    val topEntries = entries.zip(entries.scanLeft(0)(_ + _.length + 1).tail)
+      .takeWhile(_._2 <= 1100).map(_._1)
     s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""queries":${topEntries.mkString("{", ",", "}")},""" +
       s""""queries_top_k":${topEntries.size},""" +
@@ -786,18 +784,11 @@ object Bench {
       // write passes' heap churn can't contaminate them; 5 reps
       // (consecutive same-code runs drew 18.6 vs 31.4 s 3-rep medians),
       // median headline, raw reps in the JSON.
-      T.objectsView(spark, sfDir)
-        .repartition(F.col("volume"), F.col("bucket"))
-        .sortWithinPartitions(F.col("volume"), F.col("bucket"), F.col("key"))
-        .write.partitionBy("volume", "bucket").mode("overwrite")
-        .parquet(scratch + "/warm")
+      T.writeKeySorted(T.objectsView(spark, sfDir), scratch + "/warm")
       val obj10 = T.namespaceScaled10(T.objectsView(spark, sfDir))
       def ingestOnce(): Double = {
         val tI = System.nanoTime()
-        obj10.repartition(F.col("volume"), F.col("bucket"))
-          .sortWithinPartitions(F.col("volume"), F.col("bucket"), F.col("key"))
-          .write.partitionBy("volume", "bucket").mode("overwrite")
-          .parquet(scratch + "/objects")
+        T.writeKeySorted(obj10, scratch + "/objects")
         T.namespaceScaled10(T.snapshotV1(spark, sfDir)).write
           .mode("overwrite").parquet(scratch + "/snap1")
         T.namespaceScaled10(T.snapshotV2(spark, sfDir)).write

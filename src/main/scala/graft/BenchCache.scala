@@ -58,16 +58,8 @@ object BenchCache {
 
   def openOrBuild(spark: SparkSession, sfDir: String): Cache = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val root = sys.env.getOrElse("SPARK_GRAFT_CACHE_DIR",
-      sys.props("user.dir") + "/target/bench_cache")
+    val (root, key) = rootAndKey(sfDir)
     val sfName = new java.io.File(sfDir).getName
-    // the key carries BOTH halves of "pure function of (sfDir, code)":
-    // the artifact-relevant engine class hash AND a content fingerprint
-    // of the source data — regenerated testdata (same path, new content)
-    // rotates the key instead of serving stale artifacts whose seal
-    // would vacuously agree with itself (review r14 finding)
-    val key = sys.env.getOrElse("SPARK_GRAFT_CACHE_KEY",
-      s"$FormatVersion-${codeHash()}-${dataFingerprint(sfDir)}-$sfName")
     Files.createDirectories(Paths.get(root))
     val dir = Paths.get(root, key)
     val opened = if (Files.exists(dir.resolve("MANIFEST"))) {
@@ -106,13 +98,24 @@ object BenchCache {
     * [[openOrBuild]] so a pinned dev key reads its own state. */
   def sealedAtCurrentKey(sfDir: String): Boolean = {
     import java.nio.file.{Files, Paths}
+    val (root, key) = rootAndKey(sfDir)
+    val dir = Paths.get(root, key)
+    Files.exists(dir.resolve("MANIFEST")) && Files.exists(dir.resolve("SEAL"))
+  }
+
+  /** The cache root and the generation key for `sfDir`. The key carries
+    * BOTH halves of "pure function of (sfDir, code)": the
+    * artifact-relevant engine class hash AND a content fingerprint of the
+    * source data — regenerated testdata (same path, new content) rotates
+    * the key instead of serving stale artifacts whose seal would
+    * vacuously agree with itself. */
+  private def rootAndKey(sfDir: String): (String, String) = {
     val root = sys.env.getOrElse("SPARK_GRAFT_CACHE_DIR",
       sys.props("user.dir") + "/target/bench_cache")
     val sfName = new java.io.File(sfDir).getName
     val key = sys.env.getOrElse("SPARK_GRAFT_CACHE_KEY",
       s"$FormatVersion-${codeHash()}-${dataFingerprint(sfDir)}-$sfName")
-    val dir = Paths.get(root, key)
-    Files.exists(dir.resolve("MANIFEST")) && Files.exists(dir.resolve("SEAL"))
+    (root, key)
   }
 
   /** Store the verified expectations (probe rows, canon signatures,
@@ -261,20 +264,11 @@ object BenchCache {
     val T = graft.core.Tables
     def secs(t0: Long) = (System.nanoTime() - t0) / 1e9
     def scale10(df: DataFrame) = T.namespaceScaled10(df)
-    // ONE file per (volume,bucket) dir — guarantees the read-back
-    // partitions hold sorted runs (see the r13 scaleProbe note: a
-    // shuffle-free variant produced overlapping key ranges per dir and
-    // tripped the folds' sorted-input check)
-    def whWrite(df: DataFrame, out: String): Unit =
-      df.repartition(F.col("volume"), F.col("bucket"))
-        .sortWithinPartitions(F.col("volume"), F.col("bucket"), F.col("key"))
-        .write.partitionBy("volume", "bucket").mode("overwrite").parquet(out)
-
     val b = scala.collection.mutable.Map.empty[String, Double]
     // ---- 10×: namespace + snapshot checkpoint pair (the ingest shape
     // the TIMED sf1_ingest metric re-runs into scratch every bench run)
     val t10 = System.nanoTime()
-    whWrite(scale10(T.objectsView(spark, sfDir)), s"$dir/objects10")
+    T.writeKeySorted(scale10(T.objectsView(spark, sfDir)), s"$dir/objects10")
     scale10(T.snapshotV1(spark, sfDir))
       .write.mode("overwrite").parquet(s"$dir/snap1_10")
     scale10(T.snapshotV2(spark, sfDir))
@@ -308,7 +302,7 @@ object BenchCache {
     // than re-running the synthesis; object_id algebra stays injective
     // and the churn digit survives — Tables.namespaceScaled10 scaladoc)
     val tB = System.nanoTime()
-    whWrite(scale10(sorted10), s"$dir/objects100")
+    T.writeKeySorted(scale10(sorted10), s"$dir/objects100")
     T.docsScaled(T.documents(spark, sfDir), 100)
       .write.mode("overwrite").parquet(s"$dir/docs100")
     graft.operators.Dedup.minhashBands(spark.read.parquet(s"$dir/docs100"))

@@ -90,38 +90,40 @@ object Tables {
 
   // ---- persisted key-sorted namespace (the "RocksDB" of the engine) ----
 
-  private val warehouses = scala.collection.mutable.Map.empty[String, String]
-
   /**
    * The namespace as a PERSISTED key-sorted table: `objects` written once
-   * per (JVM, source dir) as parquet partitioned by (volume, bucket) and
-   * sorted by `key` within each file — the engine's analog of the
-   * reference's key-sorted RocksDB column family
+   * per (JVM, source dir) in the [[writeKeySorted]] layout — the engine's
+   * analog of the reference's key-sorted RocksDB column family
    * (OmMetadataManagerImpl.java:1144-1172 iterator.seek).
+   */
+  def objectsSorted(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(TempDirs.artifact("wh", dir)(
+      writeKeySorted(objectsView(spark, dir), _)))
+
+  /**
+   * Write an objects-shaped frame in the key-sorted warehouse layout:
+   * parquet partitioned by (volume, bucket), ONE file per partition dir,
+   * sorted by `key` within it.
    *
    * Why this layout at 100 TB: every listing query scopes to
    * volume = v AND bucket = b, which becomes a DIRECTORY partition filter
    * (only that bucket's files are listed/read — true O(bucket) pruning),
    * and the in-file key sort gives parquet row-group min/max stats that
    * skip all ranges not overlapping the prefix/startKey range — together
-   * the O(page) "seek" the reference gets from RocksDB.
+   * the O(page) "seek" the reference gets from RocksDB. One file per dir
+   * means a read-back partition holds one sorted run (a shuffle-free
+   * variant produced overlapping key ranges per dir and tripped the
+   * folds' sorted-input check).
    */
-  def objectsSorted(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val w = warehouses.getOrElseUpdate(dir, {
-      val out = graft.core.TempDirs.create("graft_wh_")
-      objectsView(spark, dir)
-        .repartition(col("volume"), col("bucket"))
-        // sort includes the partition columns: the partitioned write's
-        // required ordering is then already satisfied, so FileFormatWriter
-        // inserts NO extra sort — an added partition-cols-only sort is not
-        // key-stable and would silently break in-file key order (the
-        // contract nsSummarySorted's fold depends on)
-        .sortWithinPartitions(col("volume"), col("bucket"), col("key"))
-        .write.partitionBy("volume", "bucket").mode("overwrite").parquet(out)
-      out
-    })
-    spark.read.parquet(w)
-  }
+  def writeKeySorted(df: DataFrame, out: String): Unit =
+    df.repartition(col("volume"), col("bucket"))
+      // sort includes the partition columns: the partitioned write's
+      // required ordering is then already satisfied, so FileFormatWriter
+      // inserts NO extra sort — an added partition-cols-only sort is not
+      // key-stable and would silently break in-file key order (the
+      // contract nsSummarySorted's fold depends on)
+      .sortWithinPartitions(col("volume"), col("bucket"), col("key"))
+      .write.partitionBy("volume", "bucket").mode("overwrite").parquet(out)
 
   /** buckets (ref OmBucketInfo.java:52-114): usage rollup + deterministic quotas. */
   // The bucket catalog is a 40-row dim derived by aggregating the whole
@@ -825,23 +827,14 @@ object Tables {
   private def lastSeg(c: org.apache.spark.sql.Column) =
     element_at(split(c, "/"), -1)
 
-  // The FSO tables are PERSISTED entities in the reference (directoryTable/
-  // fileTable); derive them once per (JVM, source) into a parquet dir and
-  // RE-READ per session (like objectsSorted) — the cache stores only paths,
-  // so a stopped-and-recreated SparkSession never sees a DataFrame bound to
-  // a dead session, and nothing stays pinned in the block cache.
-  private val fsoPaths = scala.collection.mutable.Map.empty[(String, String), String]
-  private def memoPersist(spark: SparkSession, kind: String, dir: String)
-                         (build: => DataFrame): DataFrame = {
-    val p = synchronized {
-      fsoPaths.getOrElseUpdate((kind, dir), {
-        val out = graft.core.TempDirs.create(s"graft_${kind}_")
-        build.write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    spark.read.parquet(p)
-  }
+  /** A derived table of source `dir` stored as parquet: written by the
+    * first call per JVM for this `kind` (see [[TempDirs.artifact]]) and
+    * re-read by every call. The FSO tables are PERSISTED entities in the
+    * reference (directoryTable/fileTable) and are stored this way. */
+  def memoPersist(spark: SparkSession, kind: String, dir: String)
+                 (build: => DataFrame): DataFrame =
+    spark.read.parquet(TempDirs.artifact(kind, dir)(
+      build.write.mode("overwrite").parquet(_)))
 
   def directoriesFso(spark: SparkSession, dir: String): DataFrame =
     memoPersist(spark, "dirs", dir)(directoriesFsoBuild(objects(spark, dir)))
@@ -893,22 +886,9 @@ object Tables {
     * [[objectsSorted]]) — the input shape [[graft.operators.Aggregates
     * .nsSummarySorted]]'s shuffle-free fold requires. Written once per
     * (JVM, source dir); ingest cost, not query cost. */
-  def objectsMixedSorted(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val w = warehouses.getOrElseUpdate(dir + "#mixed", {
-      val out = graft.core.TempDirs.create("graft_whmx_")
-      objectsMixed(spark, dir)
-        .repartition(col("volume"), col("bucket"))
-        // sort includes the partition columns: the partitioned write's
-        // required ordering is then already satisfied, so FileFormatWriter
-        // inserts NO extra sort — an added partition-cols-only sort is not
-        // key-stable and would silently break in-file key order (the
-        // contract nsSummarySorted's fold depends on)
-        .sortWithinPartitions(col("volume"), col("bucket"), col("key"))
-        .write.partitionBy("volume", "bucket").mode("overwrite").parquet(out)
-      out
-    })
-    spark.read.parquet(w)
-  }
+  def objectsMixedSorted(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(TempDirs.artifact("whmx", dir)(
+      writeKeySorted(objectsMixed(spark, dir), _)))
 
   def directoriesFsoDeep(spark: SparkSession, dir: String): DataFrame =
     memoPersist(spark, "dirsDeep", dir)(directoriesFsoBuild(objectsDeep(spark, dir)))

@@ -773,8 +773,6 @@ object CommitLog {
 
   // ---- materialized checkpoints + log-slice delta diff ---------------------
 
-  private val snapWarehouses = scala.collection.mutable.Map.empty[String, String]
-
   /**
    * Materialize the commit log (seq-range-sorted parquet, so a delta slice
    * is a row-group-pruned scan) and each live snapshot's folded checkpoint
@@ -783,9 +781,8 @@ object CommitLog {
    * disk. Returns the warehouse dir.
    */
   def snapshotWarehouse(spark: SparkSession, objects: DataFrame,
-                        dir: String): String = synchronized {
-    snapWarehouses.getOrElseUpdate(dir, {
-      val out = graft.core.TempDirs.create("graft_snap_")
+                        dir: String): String =
+    graft.core.TempDirs.artifact("snap", dir) { out =>
       synthesizeLog(objects)
         .repartitionByRange(8, col("seq"))
         .sortWithinPartitions("seq", "volume", "bucket", "key")
@@ -794,9 +791,7 @@ object CommitLog {
       snapshotChain.foreach { case (name, seq) =>
         applyAt(logDf, seq).write.mode("overwrite").parquet(s"$out/state_$name")
       }
-      out
-    })
-  }
+    }
 
   /**
    * Log-slice snapshot diff: fold ONLY the records with

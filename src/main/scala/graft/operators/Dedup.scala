@@ -600,8 +600,10 @@ object Dedup {
     // ONE normalize+shingle pass over the batch text: the dictionary
     // probe and the set encode both consume the pinned frame (each ran
     // its own explode before — r15 measured the two passes as a
-    // material share of the 100× probe); blocks are batch-shingle-sized
-    // and freed by the ContextCleaner like every other pin here
+    // material share of the 100× probe); blocks are batch-shingle-sized.
+    // Unlike the localCheckpoint pins here, this Dataset.persist pin is
+    // not freed by the ContextCleaner: the session's CacheManager holds it
+    // for the whole session, and a later call with the same plan reuses it
     val batchShingles = shingleFrame(newDocs).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batchSets = ngramSetsFromShingles(batchShingles,

@@ -82,8 +82,10 @@ object Hierarchy {
       // own evaluation re-ran the ladder a SECOND time (r15 measured the
       // fso listing family at ~2× its join cost for exactly this reason).
       // The pinned blocks are dir-table-sized (orders of magnitude below
-      // the file table) and freed by the ContextCleaner once unreachable —
-      // the same lifecycle the deeper-than-hint extension path already had.
+      // the file table). They are NOT freed when the frame becomes
+      // unreachable: a Dataset.persist pin is registered in the session's
+      // CacheManager and stays there for the whole session, and a later
+      // call with the same plan reuses it instead of re-running the ladder.
       cur = cur.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cur.count() // full fill: isEmpty alone short-circuits the cache

@@ -14,11 +14,7 @@ object BppDebug {
       graft.core.Tables.namespaceScaled10(df)
     val s1 = T.objectsSorted(spark, sfDir)
     val wh = graft.core.TempDirs.create("graft_bpp_")
-    scale10(T.objectsView(spark, sfDir))
-      .repartition(F.col("volume"), F.col("bucket"))
-      .sortWithinPartitions(F.col("volume"), F.col("bucket"), F.col("key"))
-      .write.partitionBy("volume", "bucket").mode("overwrite")
-      .parquet(wh + "/objects")
+    T.writeKeySorted(scale10(T.objectsView(spark, sfDir)), wh + "/objects")
     val s10 = spark.read.parquet(wh + "/objects")
     val cs = T.containersScm(spark, sfDir)
     def bpp(o: org.apache.spark.sql.DataFrame) =

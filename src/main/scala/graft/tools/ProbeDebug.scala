@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{functions => F}
-
 /** One-off: time the sf1 probes with extra reps to find the warm floor
   * (is the reported min JIT-bound, IO-bound, or plan-bound?). */
 object ProbeDebug {
@@ -14,9 +12,7 @@ object ProbeDebug {
     val obj10 = scale10(T.objects(spark, sfDir))
     val t0 = System.nanoTime()
     val wh10 = graft.core.TempDirs.create("graft_sf1_")
-    obj10.repartition(F.col("volume"), F.col("bucket"))
-      .sortWithinPartitions(F.col("volume"), F.col("bucket"), F.col("key"))
-      .write.partitionBy("volume", "bucket").mode("overwrite").parquet(wh10)
+    T.writeKeySorted(obj10, wh10)
     println(f"[probe] ingest ${(System.nanoTime() - t0) / 1e9}%.1f s")
     val nFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(wh10))
       .filter(p => p.toString.endsWith(".parquet")).count()
